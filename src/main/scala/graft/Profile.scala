@@ -86,7 +86,8 @@ object Profile {
     val sampleOn = new java.util.concurrent.atomic.AtomicBoolean(false)
     val samples = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
     val sampler = new Thread(() => {
-      while (true) {
+      var running = true
+      while (running) {
         try {
           if (sampleOn.get()) {
             val all = Thread.getAllStackTraces
@@ -106,10 +107,13 @@ object Profile {
               }
             }
           }
-          Thread.sleep(100)
-        } catch { case e: Throwable =>
+        } catch { case scala.util.control.NonFatal(e) =>
           samples.merge(s"(sampler error: ${e.getClass.getSimpleName})", 1, (a, b) => a + b)
         }
+        // outside the catch: a throwing iteration still pauses, and an
+        // interrupt stops the sampler instead of being swallowed
+        try Thread.sleep(100)
+        catch { case _: InterruptedException => running = false }
       }
     }, "graft-profile-sampler")
     sampler.setDaemon(true)

@@ -398,10 +398,8 @@ object Mv {
     val w = baseVs.last
     // after the nonEmpty check, so an empty base reports the contract
     // error above, not a reader failure from inside the type check;
-    // schemaOf is a manifest read (no scan), falling back to the reader
-    // only for pre-schema-recording manifests
+    // schemaOf is a manifest read (no scan)
     val baseSchema = Snapshots.schemaOf(spark, baseRoot, w)
-      .getOrElse(Snapshots.read(spark, baseRoot, Some(w)).schema)
     val plainGroups = groupCols.filter(g => Snapshots.timeSpec(g).isEmpty)
     requireDefCols(baseSchema, baseKeyCols, plainGroups, sumCols, minMaxCols,
       s"base $baseRoot", distinctCols ++ approxDistinctCols)
@@ -647,6 +645,9 @@ object Mv {
       s"$mvRoot maintains count(distinct $c) but its companion at $compRoot " +
         "has no versions — a crashed create; drop the MV root and recreate")
     val compV = compVs.last
+    if (!Snapshots.schemaOf(spark, compRoot, compV).fieldNames.contains(VdCol))
+      Snapshots.outdatedFormat(s"count(distinct $c) companion at $compRoot",
+        s"no $VdCol value digest", "drop and recreate the MV")
     val compLast = Snapshots.lastBatchId(spark, compRoot).getOrElse(sys.error(
       s"companion $compRoot carries no batch id — was it written outside Mv?"))
     require(compLast <= batchId,
@@ -702,7 +703,7 @@ object Mv {
     // Net: the candidate files are read ONCE (here) instead of three
     // times (state read + probe + anti-join).
     val oldTouched = Snapshots.readFiles(spark, compRoot, inBuckets,
-      Snapshots.schemaOf(spark, compRoot, compV), s"dv($c) v$compV touched buckets")
+      Snapshots.schemaOf(spark, compRoot, compV))
     // every touched group gets a row — a group whose last value vanished
     // reports nd = 0, which the overlay must SEE (a missing row would
     // fall back to the stale stored count)
@@ -713,14 +714,10 @@ object Mv {
         .select(col(GkCol), coalesce(col("__nd"), lit(0L)).as(s"__nd_$c"))
     if (replay) ndOf(oldTouched)
     else {
-      // a companion created before the __vd column keeps its legacy
-      // shape (no cross-group value digest): maintenance stays exact,
-      // only the exact-rollup ROUTING rewrite declines on it
-      val hasVd = oldTouched.columns.contains(VdCol)
       val sign = when(col("change").isin("insert", "update_postimage"), lit(1L))
         .when(col("change").isin("delete", "update_preimage"), lit(-1L))
-      val dvdKeys = Seq(gk(groupCols).as(GkCol), vk(groupCols, c).as(VkCol)) ++
-        (if (hasVd) Seq(vd(c).as(VdCol)) else Nil)
+      val dvdKeys = Seq(gk(groupCols).as(GkCol), vk(groupCols, c).as(VkCol),
+        vd(c).as(VdCol))
       val dvd = cdf.withColumn("__sign", sign)
         .where(col("__sign").isNotNull && col(c).isNotNull)
         .groupBy(dvdKeys: _*)
@@ -730,13 +727,11 @@ object Mv {
       val dd = dvd.alias("__dd")
       val mergedCols = Seq(
         coalesce(col(s"__do.$GkCol"), col(s"__dd.$GkCol")).as(GkCol),
-        coalesce(col(s"__do.$VkCol"), col(s"__dd.$VkCol")).as(VkCol)) ++
-        (if (hasVd) Seq(
-          coalesce(col(s"__do.$VdCol"), col(s"__dd.$VdCol")).as(VdCol)) else Nil) ++
-        Seq(
-          (coalesce(col("__do.vcount"), lit(0L)) +
-            coalesce(col("__dd.__dn"), lit(0L))).as("vcount"),
-          col("__dd.__dn").isNotNull.as("__chg"))
+        coalesce(col(s"__do.$VkCol"), col(s"__dd.$VkCol")).as(VkCol),
+        coalesce(col(s"__do.$VdCol"), col(s"__dd.$VdCol")).as(VdCol),
+        (coalesce(col("__do.vcount"), lit(0L)) +
+          coalesce(col("__dd.__dn"), lit(0L))).as("vcount"),
+        col("__dd.__dn").isNotNull.as("__chg"))
       val stateNew = o.join(dd, col(s"__do.$VkCol") === col(s"__dd.$VkCol"),
           "full_outer")
         .select(mergedCols: _*)
@@ -749,9 +744,8 @@ object Mv {
           s"count(distinct $c) companion at $compRoot would go NEGATIVE for a " +
             "(group,value) pair — the feed retracts values it never counted " +
             "(state diverged; drop and recreate the MV)")
-        val writeCols = Seq(col(GkCol), col(VkCol)) ++
-          (if (hasVd) Seq(col(VdCol)) else Nil) ++
-          Seq(col("vcount"), (col("vcount") === 0L).as(TombCol))
+        val writeCols = Seq(col(GkCol), col(VkCol), col(VdCol), col("vcount"),
+          (col("vcount") === 0L).as(TombCol))
         // ALL of stateNew merges, not just the changed rows: unchanged
         // pairs re-upsert identically (they live in files the bucket
         // merge rewrites anyway), and in exchange the delta COVERS every
@@ -814,15 +808,13 @@ object Mv {
     // the definition must still be satisfiable: schema evolution may
     // have dropped a grouped/summed/key column — refuse with the
     // contract, not a raw unresolved-column error mid-plan
-    Snapshots.schemaOf(spark, d.baseRoot, cur).foreach { sch =>
-      val have = sch.fieldNames.toSet
-      val missing = (d.baseKeyCols ++ d.groupCols.map(groupSource) ++ d.sumCols ++
-        d.minMaxCols ++ d.distinctCols ++ d.approxCols ++ d.quantileCols)
-        .filterNot(have)
-      require(missing.isEmpty,
-        s"MV definition references column(s) ${missing.mkString(", ")} that " +
-          s"base ${d.baseRoot} v$cur no longer carries — drop and redefine the MV")
-    }
+    val have = Snapshots.schemaOf(spark, d.baseRoot, cur).fieldNames.toSet
+    val missing = (d.baseKeyCols ++ d.groupCols.map(groupSource) ++ d.sumCols ++
+      d.minMaxCols ++ d.distinctCols ++ d.approxCols ++ d.quantileCols)
+      .filterNot(have)
+    require(missing.isEmpty,
+      s"MV definition references column(s) ${missing.mkString(", ")} that " +
+        s"base ${d.baseRoot} v$cur no longer carries — drop and redefine the MV")
     if (cur <= w) return Refresh("noop", w, w, 0L, None)
 
     val storedGroups = d.groupCols.map(groupStored)
@@ -981,7 +973,7 @@ object Mv {
       case _ => mvFiles
     }
     val mvInBuckets = Snapshots.readFiles(spark, mvRoot, inBuckets,
-      Snapshots.schemaOf(spark, mvRoot, mvV), s"mv v$mvV touched buckets")
+      Snapshots.schemaOf(spark, mvRoot, mvV))
       .drop(GkCol)
     val counted = IncrementalView.applyCountSum(mvInBuckets, cdf,
       groupCols, sumCols, minMaxCols,
@@ -1163,7 +1155,7 @@ object Mv {
       case None => (all, false)
     }
     (Snapshots.readFiles(spark, root, files,
-      Snapshots.schemaOf(spark, root, version), s"$root v$version group probe"),
+      Snapshots.schemaOf(spark, root, version)),
       pruned)
   }
 
@@ -1350,7 +1342,7 @@ object Mv {
       joinKey: String, deltaKeys: DataFrame): (DataFrame, Boolean) = {
     val (files, pruned) = probeFiles(spark, root, version, joinKey, deltaKeys)
     (Snapshots.readFiles(spark, root, files,
-      Snapshots.schemaOf(spark, root, version), s"$root v$version bucket probe"),
+      Snapshots.schemaOf(spark, root, version)),
       pruned)
   }
 
@@ -1499,9 +1491,7 @@ object Mv {
     require(lVs.nonEmpty && rVs.nonEmpty, "both bases need published versions")
     val (wL, wR) = (lVs.last, rVs.last)
     val lSchema = Snapshots.schemaOf(spark, leftRoot, wL)
-      .getOrElse(Snapshots.read(spark, leftRoot, Some(wL)).schema)
     val rSchema = Snapshots.schemaOf(spark, rightRoot, wR)
-      .getOrElse(Snapshots.read(spark, rightRoot, Some(wR)).schema)
     val overlap = lSchema.fieldNames.toSet.intersect(rSchema.fieldNames.toSet)
     require(overlap.isEmpty,
       s"join MV bases share column name(s) ${overlap.mkString(", ")} — the joined " +
@@ -1706,7 +1696,6 @@ object Mv {
     val (wL, wM, wR) = (vs(0).last, vs(1).last, vs(2).last)
     val schemas = roots.zip(Seq(wL, wM, wR)).map { case (r, v) =>
       Snapshots.schemaOf(spark, r, v)
-        .getOrElse(Snapshots.read(spark, r, Some(v)).schema)
     }
     val dup = schemas.flatMap(_.fieldNames).groupBy(identity)
       .collect { case (n, occ) if occ.size > 1 => n }
@@ -1929,9 +1918,7 @@ object Mv {
           // the full 3-way join, row-pruned above it (recountPruned false)
           val recountOf: DataFrame => (DataFrame, Boolean) = { retracted =>
             def fieldsOf(root: String, v: Int) =
-              Snapshots.schemaOf(spark, root, v)
-                .getOrElse(Snapshots.read(spark, root, Some(v)).schema)
-                .fieldNames.toSet
+              Snapshots.schemaOf(spark, root, v).fieldNames.toSet
             // group SOURCES (a transform group reads its time column):
             // the carrying side derives the stored unit itself
             val srcCols = d.groupCols.map(groupSource)
@@ -2115,9 +2102,7 @@ object Mv {
           // recountPruned = false.
           val recountOf: DataFrame => (DataFrame, Boolean) = { retracted =>
             def fieldsOf(root: String, v: Int) =
-              Snapshots.schemaOf(spark, root, v)
-                .getOrElse(Snapshots.read(spark, root, Some(v)).schema)
-                .fieldNames.toSet
+              Snapshots.schemaOf(spark, root, v).fieldNames.toSet
             // group SOURCES (a transform group reads its time column):
             // the carrying side derives the stored unit itself
             val srcCols = d.groupCols.map(groupSource)

@@ -93,6 +93,25 @@ object SnapshotStats {
         }
       }.toMap
 
+  /** The in-process footer-read pool of the small-commit path, shared by
+    * every commit: eight daemon threads (a hung read can never pin the
+    * JVM at exit), created on first use.
+    */
+  private lazy val footerPool: scala.concurrent.ExecutionContext = {
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    scala.concurrent.ExecutionContext.fromExecutor(
+      java.util.concurrent.Executors.newFixedThreadPool(8, (r: Runnable) => {
+        val t = new Thread(r, s"graft-footer-stats-${n.incrementAndGet()}")
+        t.setDaemon(true)
+        t
+      }))
+  }
+
+  /** Upper bound on one commit's in-process footer reads: a hung footer
+    * read fails the commit loudly instead of stalling it forever.
+    */
+  private val FooterTimeout = scala.concurrent.duration.Duration(10, "minutes")
+
   /** Collect stats lines for `relFiles` under `root`. Footer reads only;
     * distributed when the file count justifies a job, driver-side for the
     * handful-of-files case (a job would cost more than the reads).
@@ -110,17 +129,12 @@ object SnapshotStats {
     if (relFiles.size <= 16) {
       if (relFiles.size == 1) footerStats(qualified, relFiles.head, hconf).sorted
       else {
-        import scala.concurrent.{Await, Future, ExecutionContext}
-        import scala.concurrent.duration.Duration
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.min(8, relFiles.size))
-        try {
-          implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-          Await.result(
-            Future.traverse(relFiles)(rel =>
-              Future(footerStats(qualified, rel, hconf))),
-            Duration.Inf).flatten.sorted
-        } finally pool.shutdown()
+        import scala.concurrent.{Await, Future}
+        implicit val ec: scala.concurrent.ExecutionContext = footerPool
+        Await.result(
+          Future.traverse(relFiles)(rel =>
+            Future(footerStats(qualified, rel, hconf))),
+          FooterTimeout).flatten.sorted
       }
     } else {
       val conf = new SerializableConfiguration(hconf)

@@ -265,6 +265,39 @@ object Snapshots {
       SnapshotStats.parse(lines)
     lazy val rows: Map[String, Long] = SnapshotStats.parseRows(lines)
     lazy val bytes: Map[String, Long] = SnapshotStats.parseBytes(lines)
+    /** How these lines fall short of the current on-disk format, if
+      * they do: every reader below assumes a schema header, per-file
+      * `#seq=`/`#rows=`/`#bytes=` lines and versioned `#dv=` lines.
+      */
+    lazy val outdated: Option[String] = {
+      val listed = lines.filterNot(_.startsWith("#"))
+      lazy val seq = lines.filter(_.startsWith(SEQ_HEADER)).map(statsLineFile).toSet
+      if (!lines.exists(_.startsWith(SCHEMA_HEADER))) Some("no #schema= header")
+      else if (!listed.forall(seq)) Some("a file without a #seq= line")
+      else if (!listed.forall(rows.contains)) Some("a file without a #rows= line")
+      else if (!listed.forall(bytes.contains)) Some("a file without a #bytes= line")
+      else if (lines.exists(l => l.startsWith(DV_HEADER) && l.split("\t", -1).length < 3))
+        Some("an unversioned #dv= line")
+      else None
+    }
+  }
+
+  /** The one refusal for on-disk state older than the current format:
+    * names what is outdated and the call that brings it current.
+    */
+  private[graft] def outdatedFormat(what: String, why: String, fix: String): Nothing =
+    throw new IllegalStateException(
+      s"$what predates the current on-disk format ($why) — $fix")
+
+  /** [[manifest]] for readers that rely on the current format: an older
+    * manifest fails through [[outdatedFormat]], naming [[upgrade]].
+    */
+  private def current(spark: SparkSession, root: String, version: Int): Manifest = {
+    val m = manifest(spark, root, version)
+    m.outdated.foreach(why => outdatedFormat(s"snapshot v$version under $root", why,
+      s"run Snapshots.upgrade(spark, \"$root\") to commit a current-format head " +
+        "(older versions stay unreadable until expired)"))
+    m
   }
 
   /** Committed manifests are immutable (atomic-rename commit, never
@@ -581,51 +614,22 @@ object Snapshots {
     * [[expire]] deletes old manifests: a walk over survivors would
     * collapse every first-seen onto the oldest surviving version and
     * retro-apply dvs to post-dv files (silently dropping re-inserted
-    * rows). Legacy manifests written before `#seq=` existed fall back
-    * to the log walk, which is correct as long as the log is unexpired.
+    * rows).
     */
   private def history(spark: SparkSession, root: String,
       version: Int): (Map[String, Int], Seq[Dv]) = {
-    val lines = manifestLines(spark, root, version)
-    val recordedSeq: Map[String, Int] = lines.collect {
+    val lines = current(spark, root, version).lines
+    val firstSeen: Map[String, Int] = lines.collect {
       case l if l.startsWith(SEQ_HEADER) =>
-        val body = l.drop(SEQ_HEADER.length)
-        val (p, v) = body.span(_ != '\t')
+        val (p, v) = l.drop(SEQ_HEADER.length).span(_ != '\t')
         p -> v.drop(1).toInt
     }.toMap
-    val dvParsed = lines.collect {
+    val dvs = lines.collect {
       case l if l.startsWith(DV_HEADER) =>
         val parts = l.drop(DV_HEADER.length).split("\t", -1)
-        (l, parts(0), parts(1).split(",").toSeq,
-          if (parts.length >= 3) Some(parts(2).toInt) else None)
-    }
-    val fl = lines.filterNot(_.startsWith("#"))
-    lazy val (walkFiles, walkDvs) = walkHistory(spark, root, version)
-    val firstSeen = fl.map(f =>
-      f -> recordedSeq.getOrElse(f, walkFiles.getOrElse(f, version))).toMap
-    val dvs = dvParsed.map { case (l, path, kc, ver) =>
-      Dv(path, kc, ver.orElse(walkDvs.get(l)).getOrElse(version))
+        Dv(parts(0), parts(1).split(",").toSeq, parts(2).toInt)
     }
     (firstSeen, dvs)
-  }
-
-  /** Legacy fallback for pre-`#seq=` manifests: first-seen versions from
-    * one ascending pass over the surviving manifest log.
-    */
-  private def walkHistory(spark: SparkSession, root: String,
-      version: Int): (Map[String, Int], Map[String, Int]) = {
-    val firstSeenFile = scala.collection.mutable.Map.empty[String, Int]
-    val firstSeenDv = scala.collection.mutable.Map.empty[String, Int]
-    versions(spark, root).filter(_ <= version).foreach { w =>
-      manifestLines(spark, root, w).foreach {
-        case l if l.startsWith(DV_HEADER) =>
-          if (!firstSeenDv.contains(l)) firstSeenDv(l) = w
-        case l if !l.startsWith("#") =>
-          if (!firstSeenFile.contains(l)) firstSeenFile(l) = w
-        case _ => ()
-      }
-    }
-    (firstSeenFile.toMap, firstSeenDv.toMap)
   }
 
   /** Whether a version carries outstanding merge-on-read delete vectors
@@ -735,13 +739,14 @@ object Snapshots {
         "outstanding merge-on-read delete vectors — run materializeDeletes " +
         "(targeted) or compact (full rewrite) first")
 
-  /** The schema recorded at publish time for a version (None for
-    * manifests written before schema recording existed — readers fall
-    * back to parquet `mergeSchema` for those).
+  /** The schema recorded at publish time for a version (its `#schema=`
+    * header; a manifest without one is refused — see [[upgrade]]).
     */
-  def schemaOf(spark: SparkSession, root: String, version: Int): Option[StructType] =
-    manifestLines(spark, root, version)
-      .find(_.startsWith(SCHEMA_HEADER))
+  def schemaOf(spark: SparkSession, root: String, version: Int): StructType =
+    schemaIn(current(spark, root, version).lines).get
+
+  private def schemaIn(lines: Seq[String]): Option[StructType] =
+    lines.find(_.startsWith(SCHEMA_HEADER))
       .map(l => DataType.fromJson(l.drop(SCHEMA_HEADER.length)).asInstanceOf[StructType])
 
   /** Union-merge for append publishes and merges: `base`'s columns keep
@@ -946,8 +951,7 @@ object Snapshots {
     val baseDvs: Seq[String] =
       if (append && prev.nonEmpty) dvLinesOf(spark, root, prev.last) else Seq.empty
     val schema: StructType =
-      if (append && prev.nonEmpty)
-        schemaOf(spark, root, prev.last).map(unionMerge(_, df.schema)).getOrElse(df.schema)
+      if (append && prev.nonEmpty) unionMerge(schemaOf(spark, root, prev.last), df.schema)
       else df.schema
     // the cluster guarantee is per-version: a fresh clustered publish
     // claims it; a clustered APPEND only if the base already holds it for
@@ -976,7 +980,7 @@ object Snapshots {
             "re-publish the whole table sorted (append=false), or append unsorted")
         Seq(s"$SORT_HEADER$s")
     }
-    commit(f, root, prev.lastOption.getOrElse(0) + 1, base ++ newFiles, Some(schema),
+    commit(f, root, prev.lastOption.getOrElse(0) + 1, base ++ newFiles, schema,
       clusterHeader ++ sortHeader ++ extraHeader ++ baseDvs ++ baseStats ++
         SnapshotStats.collect(spark, root, newFiles),
       target = stageAs.map(stagedManifestPath(root, _)))
@@ -1198,10 +1202,9 @@ object Snapshots {
     */
   def readStaged(spark: SparkSession, root: String, token: String): DataFrame = {
     val lines = stagedLines(spark, root, token)
-    val schema = lines.find(_.startsWith(SCHEMA_HEADER))
-      .map(l => DataType.fromJson(l.drop(SCHEMA_HEADER.length)).asInstanceOf[StructType])
-    readFiles(spark, root, lines.filterNot(_.startsWith("#")), schema,
-      s"staged $token")
+    val schema = schemaIn(lines).getOrElse(outdatedFormat(s"staged '$token' under $root",
+      "no #schema= header", "abort it and stage again"))
+    readFiles(spark, root, lines.filterNot(_.startsWith("#")), schema)
   }
 
   /** WRITE–AUDIT–PUBLISH, publish step: promote a staged commit to the
@@ -1287,9 +1290,9 @@ object Snapshots {
     * operators persist small state CONTRACTS this way (e.g. the
     * incremental near-dup bucket count, whose mismatch across calls
     * would silently drop cross-batch collisions). Walks versions
-    * newest-first because maintenance commits (compact's rewrite
-    * versions) do not re-attach custom headers; cost is O(1) manifest
-    * parses in steady state (the header rides every ingest version).
+    * newest-first because most maintenance commits (rewrites, rollbacks)
+    * do not re-attach custom headers; cost is O(1) manifest parses in
+    * steady state (the header rides every ingest version).
     */
   private[graft] def headerValue(spark: SparkSession, root: String,
       prefix: String): Option[String] =
@@ -1533,9 +1536,7 @@ object Snapshots {
     val vs = versions(spark, root)
     require(vs.nonEmpty, s"no snapshots published under $root")
     val v = vs.last
-    val old = schemaOf(spark, root, v).getOrElse(
-      throw new IllegalStateException(
-        s"v$v under $root records no schema header — cannot evolve"))
+    val old = schemaOf(spark, root, v)
     newSchema.fields.foreach { nf =>
       old.fields.find(_.name == nf.name).foreach(of =>
         require(of.dataType == nf.dataType || widens(of.dataType, nf.dataType),
@@ -1547,7 +1548,7 @@ object Snapshots {
         require(nf.nullable,
           s"added column '${nf.name}' must be nullable: existing rows have no value")
     }
-    commit(fs(spark, root), root, v + 1, files(spark, root, v), Some(newSchema),
+    commit(fs(spark, root), root, v + 1, files(spark, root, v), newSchema,
       clusterOf(spark, root, v).filter(clusterApplies(_, newSchema.fieldNames.toSeq))
         .map(c => s"$CLUSTER_HEADER$c").toSeq ++
         // file-preserving: a widening reinterprets bytes, it never reorders
@@ -1558,8 +1559,52 @@ object Snapshots {
         dvLinesOf(spark, root, v) ++ statsLinesOf(spark, root, v))
   }
 
+  /** Bring a root written in an older on-disk format up to the current
+    * one — the only code that knows the older shapes. The next version
+    * re-lists the head's files with everything readers now assume: a
+    * `#schema=` header (one footer merge when the head recorded none),
+    * a `#seq=` line per file (first-seen versions from one ascending
+    * walk over the surviving manifest log), `#rows=`/`#bytes=`/`#stats=`
+    * lines from [[SnapshotStats.collect]] for files that lack them, and
+    * the committing version on every `#dv=` line. Layout, batch and
+    * custom header lines carry verbatim; no data file moves. A current
+    * head is left alone. Versions below the upgraded head keep their old
+    * format — time travel to them refuses until [[expire]] drops them.
+    * Returns the head version.
+    */
+  def upgrade(spark: SparkSession, root: String): Int = {
+    val vs = versions(spark, root)
+    require(vs.nonEmpty, s"no snapshots published under $root")
+    val v = vs.last
+    val m = manifest(spark, root, v)
+    if (m.outdated.isEmpty) return v
+    val fl = m.lines.filterNot(_.startsWith("#"))
+    val firstSeen = scala.collection.mutable.Map.empty[String, Int]
+    vs.foreach(w => manifestLines(spark, root, w).foreach { l =>
+      if (!l.startsWith("#") || l.startsWith(DV_HEADER)) firstSeen.getOrElseUpdate(l, w)
+    })
+    val schema = schemaIn(m.lines).getOrElse {
+      require(fl.nonEmpty, s"v$v under $root lists no files and records no schema")
+      spark.read.option("mergeSchema", "true").parquet(fl.map(r => s"$root/$r"): _*).schema
+    }
+    // files missing a count or a size get all three footer-stats lines
+    // afresh; every other header line carries unless rebuilt below
+    val unsized = fl.filterNot(r => m.rows.contains(r) && m.bytes.contains(r))
+    val recollect = unsized.toSet
+    val footerLines = Seq("#stats=", "#rows=", "#bytes=")
+    val sequenced = m.lines.filter(_.startsWith(SEQ_HEADER)).map(statsLineFile).toSet
+    val kept = m.lines.filter(l => l.startsWith("#") && !l.startsWith(SCHEMA_HEADER) &&
+      !l.startsWith(DV_HEADER) &&
+      !(footerLines.exists(l.startsWith) && recollect(statsLineFile(l))))
+    val dvs = m.lines.filter(_.startsWith(DV_HEADER)).map(l =>
+      if (l.split("\t", -1).length >= 3) l else s"$l\t${firstSeen(l)}")
+    commit(fs(spark, root), root, v + 1, fl, schema, kept ++ dvs ++
+      fl.filterNot(sequenced).map(r => s"$SEQ_HEADER$r\t${firstSeen(r)}") ++
+      SnapshotStats.collect(spark, root, unsized))
+  }
+
   private def commit(f: FileSystem, root: String, v: Int, list: Seq[String],
-      schema: Option[StructType], statsLines: Seq[String] = Nil,
+      schema: StructType, statsLines: Seq[String] = Nil,
       target: Option[Path] = None): Int = {
     // Per-file sequence numbers, PERSISTED in the manifest: carried
     // `#seq=` lines keep their version for shared files; any listed file
@@ -1575,8 +1620,7 @@ object Snapshots {
     val dest = target.getOrElse(manifestPath(root, v))
     val tmp = new Path(dest.toString + TMP_SUFFIX)
     f.mkdirs(dest.getParent)
-    val header = schema.map(s => SCHEMA_HEADER + s.json + "\n").getOrElse("") +
-      (kept ++ newSeq).map(_ + "\n").mkString
+    val header = SCHEMA_HEADER + schema.json + "\n" + (kept ++ newSeq).map(_ + "\n").mkString
     val out = f.create(tmp, true)
     try out.write((header + list.mkString("\n") + "\n").getBytes(StandardCharsets.UTF_8))
     finally out.close()
@@ -1603,7 +1647,7 @@ object Snapshots {
     require(vs.nonEmpty, s"no snapshots published under $root")
     val v = version.getOrElse(vs.last)
     if (dvLinesOf(spark, root, v).isEmpty)
-      readFiles(spark, root, files(spark, root, v), schemaOf(spark, root, v), s"v$v")
+      readFiles(spark, root, files(spark, root, v), schemaOf(spark, root, v))
     else dvApplied(spark, root, v, None)
   }
 
@@ -1624,7 +1668,7 @@ object Snapshots {
     groups.map { case (seq, fls) =>
       val applicable = dvs.filter(_.version >= seq)
       applicable.groupBy(_.keyCols).foldLeft(
-        readFiles(spark, root, fls.sorted, schema, s"v$v seq$seq")) {
+        readFiles(spark, root, fls.sorted, schema)) {
         case (df, (kc, ds)) =>
           kc.foreach(k => require(df.columns.contains(k),
             s"delete-vector key column '$k' not in v$v schema"))
@@ -1633,25 +1677,13 @@ object Snapshots {
           df.join(keys, kc.toSeq, "left_anti")
       }
     }.reduceOption(_.unionByName(_))
-      .getOrElse(readFiles(spark, root, Nil, schema, s"v$v"))
+      .getOrElse(readFiles(spark, root, Nil, schema))
   }
 
   private[operators] def readFiles(spark: SparkSession, root: String, rel: Seq[String],
-      schema: Option[StructType], what: String): DataFrame = {
-    val paths = rel.map(r => s"$root/$r")
-    (schema, paths) match {
-      case (Some(s), Nil) =>
-        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], s)
-      case (None, Nil) =>
-        throw new IllegalArgumentException(
-          s"snapshot $what under $root lists no files and records no schema " +
-            "(pre-schema-header manifest of an empty publish) — cannot construct a frame")
-      case (Some(s), ps) => spark.read.schema(s).parquet(ps: _*)
-      // legacy manifest without a schema header: merge footers so a
-      // mixed-version file list doesn't depend on which file is sampled
-      case (None, ps) => spark.read.option("mergeSchema", "true").parquet(ps: _*)
-    }
-  }
+      schema: StructType): DataFrame =
+    if (rel.isEmpty) spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+    else spark.read.schema(schema).parquet(rel.map(r => s"$root/$r"): _*)
 
   /** Rows contained in files ADDED between `from` and `to` — the
     * incremental-consumption path ("process only what version N added",
@@ -1667,13 +1699,11 @@ object Snapshots {
     */
   def readAdded(spark: SparkSession, root: String, from: Int, to: Int): DataFrame = {
     val added = (files(spark, root, to).toSet -- files(spark, root, from).toSet).toSeq.sorted
-    val schema = schemaOf(spark, root, to)
-    if (added.isEmpty && schema.isEmpty) read(spark, root, Some(to)).limit(0)
-    else if (dvLinesOf(spark, root, to).nonEmpty && added.nonEmpty)
+    if (dvLinesOf(spark, root, to).nonEmpty && added.nonEmpty)
       // merge-on-read: dvs committed at or after an added file's sequence
       // still apply to it (e.g. ingest batch N, delete some of it at N+1)
       dvApplied(spark, root, to, Some(added.toSet))
-    else readFiles(spark, root, added, schema, s"delta v$from..v$to")
+    else readFiles(spark, root, added, schemaOf(spark, root, to))
   }
 
   /** Row-level CHANGE DATA FEED between two versions, derived purely
@@ -1704,9 +1734,9 @@ object Snapshots {
     val fFrom = files(spark, root, from).toSet
     val fTo = files(spark, root, to).toSet
     val newRows = readFiles(spark, root, (fTo -- fFrom).toSeq.sorted,
-      schemaOf(spark, root, to), s"v$to added")
+      schemaOf(spark, root, to))
     val oldRaw = readFiles(spark, root, (fFrom -- fTo).toSeq.sorted,
-      schemaOf(spark, root, from), s"v$from removed")
+      schemaOf(spark, root, from))
     val cols = newRows.columns.toSeq
     keyCols.foreach(k => require(cols.contains(k), s"key column $k not in v$to schema"))
     // align removed-file rows up to the `to` schema (null-fill evolution)
@@ -1742,15 +1772,14 @@ object Snapshots {
   }
 
   /** The table's commit history as a DataFrame — one row per surviving
-    * version: commit wall clock (manifest mtime), file/row/byte totals
-    * (rows NULL where any file predates row-count recording), files
-    * added/removed vs the previous surviving version, outstanding
+    * version: commit wall clock (manifest mtime), file/row/byte totals,
+    * files added/removed vs the previous surviving version, outstanding
     * delete-vector count, and a coarse operation kind inferred from the
     * file-set delta (`append` / `overwrite` / `rewrite` / `delete-vector`
     * / `no-op`). Driver-side manifest metadata only — O(versions·files)
-    * name-set work; bytes come from manifest `#bytes=` lines
-    * (`getFileStatus` only for files predating them); no data file is
-    * opened. The `DESCRIBE HISTORY` a table user asks for first.
+    * name-set work; rows and bytes come from manifest `#rows=`/`#bytes=`
+    * lines; no data file is opened. The `DESCRIBE HISTORY` a table user
+    * asks for first.
     */
   def describeHistory(spark: SparkSession, root: String): DataFrame = {
     import spark.implicits._
@@ -1765,10 +1794,9 @@ object Snapshots {
       val added = (cur -- prev).size
       val removed = (prev -- cur).size
       val dvs = dvLinesOf(spark, root, v).size
-      val rowCounts = SnapshotStats.parseRows(statsLinesOf(spark, root, v))
-      val nRows: Option[Long] =
-        if (fl.forall(rowCounts.contains)) Some(fl.map(rowCounts).sum) else None
-      val bytes = bytesOf(spark, root, v, fl)
+      val m = current(spark, root, v)
+      val nRows = fl.map(m.rows).sum
+      val bytes = fl.map(m.bytes).sum
       val op =
         if (dvs > 0 && added == 0 && removed == 0) "delete-vector"
         else if (first) "append"
@@ -2012,13 +2040,12 @@ object Snapshots {
     val cdfDir = new Path(s"$root/_cdf")
     val earliest = versions(spark, root).headOption.getOrElse(Int.MaxValue)
     if (f.exists(cdfDir)) {
-      // cache names carry their provenance: keyed `v{prev}-{w}_k{hash}`
-      // (baseline version, target version, key-column hash) or the
-      // legacy `v{w}`. A cache is unreplayable — reclaimable — when its
-      // target expired, or its non-zero baseline did (prev=0 caches are
-      // full-snapshot steps: replayable as long as the target survives).
+      // cache names carry their provenance: `v{prev}-{w}_k{hash}`
+      // (baseline version, target version, key-column hash). A cache is
+      // unreplayable — reclaimable — when its target expired, or its
+      // non-zero baseline did (prev=0 caches are full-snapshot steps:
+      // replayable as long as the target survives).
       val keyed = """v(\d+)-(\d+)_k[0-9a-f]+""".r
-      val legacy = """v(\d+)""".r
       f.listStatus(cdfDir).toSeq
         .filter(st => st.isDirectory && st.getModificationTime < cutoff)
         .filter { st =>
@@ -2027,7 +2054,6 @@ object Snapshots {
             case _ if n.contains(".build-") => true // orphaned aged temp build
             case keyed(p, w) => w.toInt < earliest ||
               (p.toInt != 0 && p.toInt < earliest)
-            case legacy(w) => w.toInt < earliest
             case _ => false // unrecognized (future writer): keep
           }
         }
@@ -2053,13 +2079,12 @@ object Snapshots {
     require(vs.nonEmpty, s"no snapshots published under $root — nothing to compact")
     val v = vs.last
     val f = fs(spark, root)
-    // manifest-driven sizing: `#bytes=` lines answer driver-side, with a
-    // metadata call only for legacy unsized files (the same metadata a
-    // read plans over).
+    // manifest-driven sizing: `#bytes=` lines answer without a file stat.
     // `minFiles` floors the count for LAYOUT-driven rewrites: a z-order
     // whose data fits one target file would otherwise collapse to a
     // single all-spanning file and skip nothing.
-    val totalBytes = bytesOf(spark, root, v, files(spark, root, v))
+    val sizes = byteCountsOf(spark, root, v)
+    val totalBytes = files(spark, root, v).map(sizes).sum
     val nFiles = math.max(minFiles,
       math.ceil(totalBytes.toDouble / targetBytes).toInt)
     val base = read(spark, root, Some(v))
@@ -2091,7 +2116,14 @@ object Snapshots {
         val zExpr = ZOrder.curve(base, zorderBy)
         base.repartitionByRange(nFiles, zExpr).sortWithinPartitions(zExpr)
       }
-    publish(spark, root, rewritten, clusterBy = cluster, sortBy = sort)
+    // custom header contracts (e.g. the near-dup bucket count) survive
+    // the rewrite, so expiring the versions below it never loses them
+    val core = Seq(SCHEMA_HEADER, DV_HEADER, SEQ_HEADER, CLUSTER_HEADER, SORT_HEADER,
+      BATCH_HEADER, BASE_HEADER, "#stats=", "#rows=", "#bytes=")
+    val custom = manifestLines(spark, root, v)
+      .filter(l => l.startsWith("#") && !core.exists(l.startsWith))
+    publish(spark, root, rewritten, clusterBy = cluster, sortBy = sort,
+      extraHeader = custom)
   }
 
   /** MERGE a delta into the snapshot table and publish the result as a
@@ -2253,7 +2285,7 @@ object Snapshots {
       else if (coveringDelta) candidates.toSet
       // no forced broadcast: a small delta broadcasts via AQE; a huge one
       // is allowed its shuffle (the touched-file set stays file-bounded)
-      else readFiles(spark, root, candidates, schema, s"v$v candidates")
+      else readFiles(spark, root, candidates, schema)
         .withColumn("__file", input_file_name())
         .join(deltaKeys, keyCols, "left_semi")
         // normalize reader URIs (file:///x vs file:/x) to the manifest's
@@ -2267,7 +2299,7 @@ object Snapshots {
       // covering delta: no candidate row's key is absent from the delta,
       // so the anti-join is empty by the attestation — skip its scan
       if (touched.isEmpty || coveringDelta) upserts.limit(0)
-      else readFiles(spark, root, touched.toSeq.sorted, schema, s"v$v touched")
+      else readFiles(spark, root, touched.toSeq.sorted, schema)
         .join(deltaKeys, keyCols, "left_anti")
     val merged = survivors.unionByName(upserts, allowMissingColumns = true)
     // a clustered base KEEPS its layout: replacement rows write through
@@ -2314,11 +2346,10 @@ object Snapshots {
           preRouted = Some(survivors))
       else writeData(f, root, merged, clusterBy = cluster,
         sortWithin = sort.map(clusterCols).getOrElse(Nil))
-    val mergedSchema = schema.map(unionMerge(_, upserts.schema)).getOrElse(
-      StructType(merged.schema.fields))
+    val mergedSchema = unionMerge(schema, upserts.schema)
     // untouched files keep their stats lines; rewritten files get fresh ones
     val keptStats = statsLinesOf(spark, root, v).filterNot(l => touched(statsLineFile(l)))
-    commit(f, root, v + 1, rel.filterNot(touched) ++ newFiles, Some(mergedSchema),
+    commit(f, root, v + 1, rel.filterNot(touched) ++ newFiles, mergedSchema,
       cluster.map(c => s"$CLUSTER_HEADER$c").toSeq ++
         sort.map(s => s"$SORT_HEADER$s").toSeq ++ extraHeader ++
         keptStats ++ SnapshotStats.collect(spark, root, newFiles))
@@ -2434,7 +2465,7 @@ object Snapshots {
     // per touched file (same granularity as mergeByKey's key probe)
     val touched: Set[String] =
       if (candidates.isEmpty) Set.empty
-      else readFiles(spark, root, candidates, schema, s"v$v candidates")
+      else readFiles(spark, root, candidates, schema)
         .filter(coalesce(predicate, lit(false)))
         .select(regexp_extract(input_file_name(), "data/[^/]+(?:/[^/]+)?/[^/]+$", 0).as("__file"))
         .distinct().collect().map(_.getString(0)).toSet
@@ -2445,7 +2476,7 @@ object Snapshots {
         clusterHeaderOf(spark, root, v) ++ sortHeaderOf(spark, root, v) ++
           statsLinesOf(spark, root, v))
     val rewritten = rewrite(
-      readFiles(spark, root, touched.toSeq.sorted, schema, s"v$v touched"))
+      readFiles(spark, root, touched.toSeq.sorted, schema))
     // a clustered base keeps its layout: replacements re-cluster on
     // write; a sorted base keeps its attestation the same way (ordered
     // replacement files beside already-attested untouched ones)
@@ -2497,17 +2528,16 @@ object Snapshots {
     val kc = keys.columns.toSeq
     require(kc.forall(!_.contains(",")) && kc.forall(!_.contains("\t")),
       s"key column names must not contain ',' or tab: ${kc.mkString(",")}")
-    schemaOf(spark, root, v).foreach { s =>
-      kc.foreach(k => require(s.fieldNames.contains(k),
-        s"delete key column '$k' not in v$v schema"))
-    }
+    val schema = schemaOf(spark, root, v)
+    kc.foreach(k => require(schema.fieldNames.contains(k),
+      s"delete key column '$k' not in v$v schema"))
     val f = fs(spark, root)
     val carried = dvLinesOf(spark, root, v) ++ statsLinesOf(spark, root, v)
     val (_, dvFiles) = writeData(f, root, keys.distinct())
     // the committing version IS the dv's sequence number — embedded in
     // the line (not derived from the log) so it survives expire()
     val newDvLines = dvFiles.map(p => s"$DV_HEADER$p\t${kc.mkString(",")}\t${v + 1}")
-    commit(f, root, v + 1, files(spark, root, v), schemaOf(spark, root, v),
+    commit(f, root, v + 1, files(spark, root, v), schema,
       clusterHeaderOf(spark, root, v) ++ sortHeaderOf(spark, root, v) ++
         newDvLines ++ carried)
   }
@@ -2540,7 +2570,7 @@ object Snapshots {
       val applicable = dvs.filter(_.version >= seq)
       if (applicable.isEmpty) Set.empty[String]
       else {
-        val base = readFiles(spark, root, fls.sorted, schema, s"v$v seq$seq")
+        val base = readFiles(spark, root, fls.sorted, schema)
           .withColumn("__file",
             regexp_extract(input_file_name(), "data/[^/]+(?:/[^/]+)?/[^/]+$", 0))
         applicable.groupBy(_.keyCols).map { case (kc, ds) =>
@@ -2560,7 +2590,7 @@ object Snapshots {
       val mine = fls.filter(touched).sorted
       if (mine.isEmpty) None
       else Some(dvs.filter(_.version >= seq).groupBy(_.keyCols).foldLeft(
-        readFiles(spark, root, mine, schema, s"v$v seq$seq touched")) {
+        readFiles(spark, root, mine, schema)) {
         case (df, (kc, ds)) => df.join(keysOf(ds, kc.toSeq), kc.toSeq, "left_anti")
       })
     }.reduce(_.unionByName(_))
@@ -2613,28 +2643,15 @@ object Snapshots {
     */
   def rowCountsOf(spark: SparkSession, root: String,
       version: Int): Map[String, Long] =
-    manifest(spark, root, version).rows
+    current(spark, root, version).rows
 
-  /** A version's parsed per-file byte lengths (`#bytes=` lines) — the
-    * manifest-resident sizing metadata behind plan-time statistics and
-    * scan-partition packing. Files listed by pre-`#bytes=` manifests are
-    * absent from the map; callers fall back to one `getFileStatus` each.
+  /** A version's parsed per-file byte lengths (`#bytes=` lines, one per
+    * listed file) — the manifest-resident sizing metadata behind
+    * plan-time statistics and scan-partition packing.
     */
   def byteCountsOf(spark: SparkSession, root: String,
       version: Int): Map[String, Long] =
-    manifest(spark, root, version).bytes
-
-  /** Total bytes of a version's `rel` files: manifest `#bytes=` lines
-    * when present (zero per-file FS RPCs), `getFileStatus` only for
-    * files a legacy manifest never sized.
-    */
-  private def bytesOf(spark: SparkSession, root: String, version: Int,
-      rel: Seq[String]): Long = {
-    val known = byteCountsOf(spark, root, version)
-    lazy val f = fs(spark, root)
-    rel.map(r => known.getOrElse(r,
-      f.getFileStatus(new Path(s"$root/$r")).getLen)).sum
-  }
+    current(spark, root, version).bytes
 
   /** Single-column [[filesWhere]]. */
   def filesBetween(spark: SparkSession, root: String, version: Int,
@@ -2658,7 +2675,7 @@ object Snapshots {
     val pred = ranges.map { case (c, (lo, hi)) => col(c).between(lit(lo), lit(hi)) }
       .reduce(_ && _)
     readFiles(spark, root, filesWhere(spark, root, v, ranges),
-      schemaOf(spark, root, v), s"v$v").filter(pred)
+      schemaOf(spark, root, v)).filter(pred)
   }
 
   /** Range read with MANIFEST-LEVEL file skipping: plan the scan over only
@@ -2694,7 +2711,7 @@ object Snapshots {
     val v = version.getOrElse(vs.last)
     requireMaterialized(spark, root, v, "readPoint")
     val kept = pointFiles(spark, root, v, column, values)
-    readFiles(spark, root, kept, schemaOf(spark, root, v), s"v$v")
+    readFiles(spark, root, kept, schemaOf(spark, root, v))
       .filter(col(column).isin(values: _*))
   }
 
@@ -2712,18 +2729,18 @@ object Snapshots {
   }
 
   /** Exact row count of a version from manifest metadata ALONE — no file
-    * is opened. Some(n) when every listed file carries a `#rows=` line
-    * (all publishes since stats recording); None otherwise (never a
-    * guess). `SELECT count(*)` over 100 TB in one manifest read.
+    * is opened: the sum of its `#rows=` lines. None while merge-on-read
+    * delete vectors are outstanding (deleted rows are not counted, so
+    * the sum would be a guess). `SELECT count(*)` over 100 TB in one
+    * manifest read.
     */
   def countRows(spark: SparkSession, root: String, version: Option[Int] = None): Option[Long] = {
     val vs = versions(spark, root)
     require(vs.nonEmpty, s"no snapshots published under $root")
     val v = version.getOrElse(vs.last)
     if (dvLinesOf(spark, root, v).nonEmpty) return None // dv rows uncounted: not provable
-    val fl = files(spark, root, v)
-    val rows = SnapshotStats.parseRows(statsLinesOf(spark, root, v))
-    if (fl.forall(rows.contains)) Some(fl.map(rows).sum) else None
+    val rows = rowCountsOf(spark, root, v)
+    Some(files(spark, root, v).map(rows).sum)
   }
 
   final case class ColRange(min: Any, max: Any, nulls: Long)

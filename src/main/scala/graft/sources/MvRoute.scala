@@ -40,7 +40,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *     `__vd`): `count(DISTINCT __vd)` over the view ⋈ companion on
   *     the group digest, re-grouped by the query's coarser grouping —
   *     O(companion rows), never the base. A view without that
-  *     companion (or a pre-`__vd` companion) declines; default-rsd
+  *     companion declines; default-rsd
   *     approx_count_distinct over a maintained `approxDistinctCols`
   *     column maps to the stored DataSketches sketch at BOTH shapes
   *     (sketches union, so even rollups route — estimate for estimate,
@@ -855,7 +855,7 @@ case class MvRoute(spark: SparkSession) extends Rule[LogicalPlan]
         baseOutput: Seq[Attribute]): Option[LogicalPlan] = {
       val vs = Snapshots.versionsCached(spark, mvRoot)
       if (vs.isEmpty) return None
-      val schema = Snapshots.schemaOf(spark, mvRoot, vs.last).getOrElse(return None)
+      val schema = Snapshots.schemaOf(spark, mvRoot, vs.last)
       val (source, vout) =
         freshViewSource(schema, mvRoot, d.groupCols, residual, baseOutput)
           .getOrElse(return None)
@@ -1233,7 +1233,7 @@ case class MvRoute(spark: SparkSession) extends Rule[LogicalPlan]
       exact: Boolean): Option[LogicalPlan] = {
     val vs = Snapshots.versionsCached(spark, mvRoot)
     if (vs.isEmpty) return None
-    val schema = Snapshots.schemaOf(spark, mvRoot, vs.last).getOrElse(return None)
+    val schema = Snapshots.schemaOf(spark, mvRoot, vs.last)
 
     def viewSource(): Option[(LogicalPlan, Map[String, AttributeReference])] =
       freshViewSource(schema, mvRoot, groupCols, residual, baseOutput)
@@ -1411,9 +1411,7 @@ case class MvRoute(spark: SparkSession) extends Rule[LogicalPlan]
       // NULL has view rows but no companion rows (its distinct count is
       // 0, exactly count(DISTINCT)'s NULL semantics). Gates: each
       // companion must exist, be AT the view's own watermark (they
-      // commit in lockstep; a crash window shows as a mismatch), and
-      // carry the `__vd` value digest (pre-`__vd` companions decline —
-      // their (group,value) digest cannot dedup values ACROSS groups).
+      // commit in lockstep; a crash window shows as a mismatch).
       val needed = companionOf.values.toSeq.distinct
       val mvBatch = Snapshots.lastBatchIdCached(spark, mvRoot)
       if (mvBatch.isEmpty) return None
@@ -1436,7 +1434,6 @@ case class MvRoute(spark: SparkSession) extends Rule[LogicalPlan]
         if (cvs.isEmpty) return None
         if (Snapshots.lastBatchIdCached(spark, compRoot) != mvBatch) return None
         val cSchema = Snapshots.schemaOf(spark, compRoot, cvs.last)
-          .getOrElse(return None)
         val (src2, out2) = viewSource().getOrElse(return None)
         val grouping2 = agg.groupingExpressions.map(ge =>
           storedGroupOf(ge, amap, baseOutput, groupCols)

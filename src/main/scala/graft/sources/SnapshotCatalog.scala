@@ -97,10 +97,8 @@ class SnapshotCatalog extends TableCatalog with ProcedureCatalog
 
   private def load(ident: Identifier, version: Int): Table = {
     val root = rootOf(ident)
-    val schema = Snapshots.schemaOf(spark, root, version).getOrElse(
-      throw new IllegalStateException(
-        s"v$version under $root records no schema header"))
-    new SnapshotTable(schema, root, Map("version" -> version.toString))
+    new SnapshotTable(Snapshots.schemaOf(spark, root, version), root,
+      Map("version" -> version.toString))
   }
 
   override def loadTable(ident: Identifier): Table = {
@@ -113,9 +111,7 @@ class SnapshotCatalog extends TableCatalog with ProcedureCatalog
       return metadataTable(ident).getOrElse(throw new NoSuchTableException(ident))
     // latest is NOT pinned: each scan of the returned table re-resolves,
     // so a long-lived cached table keeps seeing new publishes
-    val schema = Snapshots.schemaOf(spark, root, vs.last).getOrElse(
-      throw new IllegalStateException(s"v${vs.last} under $root records no schema header"))
-    new SnapshotTable(schema, root, Map.empty)
+    new SnapshotTable(Snapshots.schemaOf(spark, root, vs.last), root, Map.empty)
   }
 
   /** `SELECT * FROM cat.t.files | t.history | t.staged` — bounded
@@ -149,8 +145,7 @@ class SnapshotCatalog extends TableCatalog with ProcedureCatalog
           StructField("cluster_dir", StringType, nullable = true))),
           Snapshots.files(spark, root, v).map { fl =>
             Array[Any](UTF8String.fromString(fl),
-              bytes.get(fl).map(Long.box).orNull,
-              rows.get(fl).map(Long.box).orNull,
+              bytes(fl), rows(fl),
               dirRe.findFirstMatchIn(fl)
                 .map(m => UTF8String.fromString(m.group(1))).orNull)
           })
@@ -266,8 +261,7 @@ class SnapshotCatalog extends TableCatalog with ProcedureCatalog
     if (!tableExists(ident)) throw new NoSuchTableException(ident)
     val root = rootOf(ident)
     val v = Snapshots.versions(spark, root).last
-    val old = Snapshots.schemaOf(spark, root, v).getOrElse(
-      throw new IllegalStateException(s"v$v under $root records no schema header"))
+    val old = Snapshots.schemaOf(spark, root, v)
     val evolved = changes.foldLeft(old) {
       case (s, add: TableChange.AddColumn) =>
         require(add.fieldNames.length == 1,
@@ -667,8 +661,7 @@ class SnapshotCatalog extends TableCatalog with ProcedureCatalog
   private def historyRows(root: String): Seq[Array[Any]] = {
     val df = Snapshots.describeHistory(spark, root)
     df.selectExpr(historySchema.fieldNames.toIndexedSeq: _*).collect().map { r =>
-      Array[Any](r.getInt(0), r.getInt(1),
-        if (r.isNullAt(2)) null else r.getLong(2),
+      Array[Any](r.getInt(0), r.getInt(1), r.getLong(2),
         org.apache.spark.unsafe.types.UTF8String.fromString(r.getString(3)))
     }.toSeq
   }

@@ -132,10 +132,7 @@ class SnapshotSourceProvider extends TableProvider with DataSourceRegister
       .orElse(Option(options.get("timestampAsOf")).map(t =>
         Snapshots.versionAt(spark, root, SnapshotScan.parseAsOf(t))))
       .getOrElse(vs.last)
-    val base = Snapshots.schemaOf(spark, root, v).getOrElse(
-      throw new IllegalArgumentException(
-        s"v$v under $root records no schema header — pre-header manifests are " +
-          "readable via Snapshots.read (footer merge), not the DSv2 source"))
+    val base = Snapshots.schemaOf(spark, root, v)
     if (options.getBoolean("readChangeFeed", false))
       SnapshotScan.cdfSchemaOf(base, SnapshotScan.keyColsOf(options))
     else base
@@ -731,8 +728,7 @@ private[graft] class SnapshotScanBuilder(tableSchema: StructType,
         val files = Snapshots.files(spark, root, v)
         val rows = Snapshots.rowCountsOf(spark, root, v)
         val stats = Snapshots.statsOf(spark, root, v)
-        if (!files.forall(fl => rows.contains(fl) && stats.get(fl).exists(_.contains(c))))
-          None
+        if (!files.forall(fl => stats.get(fl).exists(_.contains(c)))) None
         else Some(files.map(fl => rows(fl) - stats(fl)(c).nulls).sum)
       }
       val parts = agg.aggregateExpressions.map {
@@ -767,7 +763,6 @@ private[graft] class SnapshotScanBuilder(tableSchema: StructType,
     val files = Snapshots.files(spark, root, v)
     val stats = Snapshots.statsOf(spark, root, v)
     val rows = Snapshots.rowCountsOf(spark, root, v)
-    if (!files.forall(rows.contains)) return None
 
     // (tag, decoded external value or null) of a file's single value for
     // a column — None when the file is not provably single-valued
@@ -1260,17 +1255,14 @@ private[graft] class SnapshotScan(tableSchema: StructType, required: StructType,
     val rel = Snapshots.files(spark, root, v)
     val kept0 = pruneBy(spark, v, rel, filters)
     // unfiltered LIMIT n: plan only the prefix whose EXACT row counts
-    // cover n (see pushLimit) — sound only when every file has a count.
+    // cover n (see pushLimit).
     // unfiltered ORDER BY c LIMIT n: the stats-bounded top-N prune.
     val kept = (limit, topN) match {
       case _ if dvOutstanding => kept0
       case (Some(n), _) if filters.isEmpty =>
         val rows = Snapshots.rowCountsOf(spark, root, v)
-        if (!kept0.forall(rows.contains)) kept0
-        else {
-          var acc = 0L
-          kept0.takeWhile { fl => val need = acc < n; acc += rows(fl); need }
-        }
+        var acc = 0L
+        kept0.takeWhile { fl => val need = acc < n; acc += rows(fl); need }
       case (_, Some((c, asc, n))) if filters.isEmpty =>
         topNPrune(spark, v, kept0, c, asc, n)
       case _ => kept0
@@ -1285,14 +1277,13 @@ private[graft] class SnapshotScan(tableSchema: StructType, required: StructType,
     * bound B, so no row beyond B can rank in the top n. Kept: files
     * whose best value is at-or-before B, plus every null-carrying file
     * (NULLS FIRST would rank them). Refused (all files kept) when any
-    * file lacks row counts or usable stats for `c`, or tags mix.
+    * file lacks usable stats for `c`, or tags mix.
     */
   private def topNPrune(spark: SparkSession, v: Int, rel: Seq[String],
       c: String, asc: Boolean, n: Int): Seq[String] = {
     val stats = Snapshots.statsOf(spark, root, v)
     val rows = Snapshots.rowCountsOf(spark, root, v)
-    if (!rel.forall(fl => rows.contains(fl) && stats.get(fl).exists(_.contains(c))))
-      return rel
+    if (!rel.forall(fl => stats.get(fl).exists(_.contains(c)))) return rel
     final case class B(fl: String, tag: String, lo: Any, hi: Any,
         nulls: Long, nonNull: Long)
     val bounds =
@@ -1682,7 +1673,7 @@ private[graft] class SnapshotScan(tableSchema: StructType, required: StructType,
         "materializeDeletes or compact first")
     if (Snapshots.hasDeleteVectors(spark, root, v)) return dvBatch(spark, v, totalFiles)
     // manifest-recorded byte lengths ride along so partition packing
-    // never stats the planned files (legacy unsized files fall back)
+    // never stats the planned files
     val sized = Snapshots.byteCountsOf(spark, root, v)
     // requested metadata columns become per-file constant rows, appended
     // by the parquet factory's partition-values mechanism
@@ -1693,7 +1684,7 @@ private[graft] class SnapshotScan(tableSchema: StructType, required: StructType,
           org.apache.spark.unsafe.types.UTF8String.fromString(s"$root/$r"): Any
         else v: Any
       }.toArray)
-    def sizedMeta(r: String) = (s"$root/$r", sized.get(r), metaOf(r))
+    def sizedMeta(r: String) = (s"$root/$r", sized(r), metaOf(r))
     clusterGroups match {
       case Some((_, _, groups, provedSorted)) =>
         // runtime (DPP) filters thin files WITHIN groups but never drop a
@@ -1845,11 +1836,11 @@ private[graft] class SnapshotScan(tableSchema: StructType, required: StructType,
     val cleanGroup =
       if (cleanFiles.isEmpty) Nil
       else Seq((org.apache.spark.sql.graftbridge.DvFilteringReaderFactory.CleanTag,
-        cleanFiles.map(r => (s"$root/$r", sized.get(r), metaOf(r)))))
+        cleanFiles.map(r => (s"$root/$r", sized(r), metaOf(r)))))
     new DvSnapshotBatch(spark, tableSchema, dataRequired, augData,
       StructType(metaFields), filters,
       cleanGroup ++ seqGroups.map { case (s, fls) =>
-        (s, fls.map(r => (s"$root/$r", sized.get(r), metaOf(r)))) },
+        (s, fls.map(r => (s"$root/$r", sized(r), metaOf(r)))) },
       augTypes, outputOrdinals, keyFilters, totalFiles - kept.size)
   }
 
@@ -1859,9 +1850,8 @@ private[graft] class SnapshotScan(tableSchema: StructType, required: StructType,
     * snapshot tables first-class citizens of join planning — a small or
     * well-pruned side reports small and auto-broadcasts, where a
     * stats-less DSv2 relation defaults to "assume huge, never
-    * broadcast". One manifest read, no per-file RPCs (`#bytes=` lines;
-    * legacy unsized files stat once), at optimize time only; failures
-    * degrade to "unknown".
+    * broadcast". One manifest read, no per-file RPCs (`#bytes=` lines),
+    * at optimize time only; failures degrade to "unknown".
     */
   private lazy val estimated: (java.util.OptionalLong, java.util.OptionalLong) =
     try {
@@ -1873,17 +1863,9 @@ private[graft] class SnapshotScan(tableSchema: StructType, required: StructType,
       val kept = SnapshotScan.prune(Snapshots.statsOf(spark, root, v),
         Snapshots.files(spark, root, v), filters)
       val rows = Snapshots.rowCountsOf(spark, root, v)
-      val numRows =
-        if (kept.forall(rows.contains))
-          java.util.OptionalLong.of(kept.map(rows).sum)
-        else java.util.OptionalLong.empty()
-      // manifest `#bytes=` lines answer driver-side with no per-file
-      // RPC; only legacy unsized files pay a getFileStatus
-      val known = Snapshots.byteCountsOf(spark, root, v)
-      lazy val fs = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val rawBytes = kept.map(r => known.getOrElse(r,
-        fs.getFileStatus(new org.apache.hadoop.fs.Path(s"$root/$r")).getLen)).sum
+      val numRows = java.util.OptionalLong.of(kept.map(rows).sum)
+      val sized = Snapshots.byteCountsOf(spark, root, v)
+      val rawBytes = kept.map(sized).sum
       // projection ratio over DATA columns only (metadata columns are
       // free per-file constants, not scan bytes)
       val ratio = math.max(1, dataRequired.size).toDouble / math.max(1, tableSchema.size)
@@ -1925,14 +1907,14 @@ private[graft] class SnapshotScan(tableSchema: StructType, required: StructType,
 private[sources] class SnapshotBatch(spark: SparkSession, root: String,
     tableSchema: StructType, readSchema: StructType, metaSchema: StructType,
     filters: Seq[Filter],
-    files: Seq[(String, Option[Long], InternalRow)], prunedFiles: Int,
-    grouped: Option[Seq[(InternalRow, Seq[(String, Option[Long], InternalRow)])]] = None,
+    files: Seq[(String, Long, InternalRow)], prunedFiles: Int,
+    grouped: Option[Seq[(InternalRow, Seq[(String, Long, InternalRow)])]] = None,
     ordered: Boolean = false)
     extends Batch {
   override def planInputPartitions(): Array[InputPartition] = grouped match {
     case Some(gs) if ordered => ParquetReadBridge.orderedKeyedFilePartitions(spark, gs)
     case Some(gs) => ParquetReadBridge.keyedFilePartitions(spark, gs)
-    case None => ParquetReadBridge.filePartitionsMeta(spark, files)
+    case None => ParquetReadBridge.filePartitions(spark, files)
   }
   override def createReaderFactory(): PartitionReaderFactory =
     ParquetReadBridge.readerFactory(spark, tableSchema, readSchema, filters, metaSchema)
@@ -1953,7 +1935,7 @@ private[sources] class SnapshotBatch(spark: SparkSession, root: String,
 private[sources] class DvSnapshotBatch(spark: SparkSession,
     tableSchema: StructType, cleanSchema: StructType, augSchema: StructType,
     metaSchema: StructType, filters: Seq[Filter],
-    tagged: Seq[(Int, Seq[(String, Option[Long], InternalRow)])],
+    tagged: Seq[(Int, Seq[(String, Long, InternalRow)])],
     augTypes: Array[DataType], outputOrdinals: Array[Int],
     keyFilters: Map[Int, Seq[(Array[Int], Set[Seq[Any]])]],
     prunedFiles: Int) extends Batch {
@@ -2055,7 +2037,8 @@ private[sources] abstract class VersionOffsetStream(spark: SparkSession,
   override def deserializeOffset(json: String): Offset = VersionOffset.parse(json)
 
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] =
-    ParquetReadBridge.filePartitionsSized(spark, plannedSized(start, end))
+    ParquetReadBridge.filePartitions(spark,
+      plannedSized(start, end).map { case (p, n) => (p, n, InternalRow.empty) })
 
   /** Surviving versions in (start, end], after the expiry guard. */
   protected def walkOf(start: Offset, end: Offset): Seq[Int] = {
@@ -2073,16 +2056,14 @@ private[sources] abstract class VersionOffsetStream(spark: SparkSession,
   protected def startVersion(start: Offset): Int =
     start.asInstanceOf[VersionOffset].version
 
-  /** The absolute file paths carrying (start, end]'s rows. */
-  private[graft] def plannedPaths(start: Offset, end: Offset): Seq[String]
-
-  /** [[plannedPaths]] with manifest-known byte lengths where available,
-    * so per-trigger partition planning skips per-file FS RPCs. Default:
-    * unknown sizes (one `getFileStatus` each at plan time).
+  /** The absolute file paths carrying (start, end]'s rows, with their
+    * byte lengths, so per-trigger partition planning needs no per-file
+    * FS RPC.
     */
-  private[graft] def plannedSized(start: Offset,
-      end: Offset): Seq[(String, Option[Long])] =
-    plannedPaths(start, end).map(_ -> None)
+  private[graft] def plannedSized(start: Offset, end: Offset): Seq[(String, Long)]
+
+  private[graft] def plannedPaths(start: Offset, end: Offset): Seq[String] =
+    plannedSized(start, end).map(_._1)
 
   override def commit(end: Offset): Unit = () // manifests are immutable
   override def stop(): Unit = ()
@@ -2099,16 +2080,16 @@ private[graft] class SnapshotMicroBatchStream(spark: SparkSession, root: String,
   /** The absolute file paths whose rows version range (start, end]
     * appended — the version-by-version walk over surviving manifests,
     * with the append-only contract enforced per step. Each kept file
-    * carries its manifest-recorded byte length (None for legacy unsized
-    * files), so per-trigger partition planning stays RPC-free.
+    * carries its manifest-recorded byte length, so per-trigger partition
+    * planning stays RPC-free.
     */
-  private[graft] override def plannedSized(start: Offset,
-      end: Offset): Seq[(String, Option[Long])] = {
+  private[graft] def plannedSized(start: Offset,
+      end: Offset): Seq[(String, Long)] = {
     val walk = walkOf(start, end)
     if (walk.isEmpty) return Nil
     val s = startVersion(start)
     var prev: Set[String] = if (s == 0) Set.empty else Snapshots.files(spark, root, s).toSet
-    val out = Seq.newBuilder[(String, Option[Long])]
+    val out = Seq.newBuilder[(String, Long)]
     walk.foreach { w =>
       if (!ignoreDeletes && Snapshots.hasDeleteVectors(spark, root, w))
         throw new IllegalStateException(
@@ -2130,15 +2111,12 @@ private[graft] class SnapshotMicroBatchStream(spark: SparkSession, root: String,
         // a tailing stream with a pushed predicate plans only admitted files
         val kept = SnapshotScan.prune(Snapshots.statsOf(spark, root, w), added, filters)
         val sized = Snapshots.byteCountsOf(spark, root, w)
-        out ++= kept.map(r => (s"$root/$r", sized.get(r)))
+        out ++= kept.map(r => (s"$root/$r", sized(r)))
       }
       prev = cur
     }
     out.result()
   }
-
-  private[graft] def plannedPaths(start: Offset, end: Offset): Seq[String] =
-    plannedSized(start, end).map(_._1)
 
   override def createReaderFactory(): PartitionReaderFactory =
     ParquetReadBridge.readerFactory(spark, tableSchema, required, filters)
@@ -2214,18 +2192,18 @@ private[sources] class SnapshotCdfStream(spark: SparkSession, root: String,
     dir
   }
 
-  private[graft] def plannedPaths(start: Offset, end: Offset): Seq[String] = {
+  private[graft] def plannedSized(start: Offset, end: Offset): Seq[(String, Long)] = {
     val walk = walkOf(start, end)
     if (walk.isEmpty) return Nil
     var prev = startVersion(start)
     val fs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = Seq.newBuilder[String]
+    val out = Seq.newBuilder[(String, Long)]
     walk.foreach { w =>
       val dir = materialize(prev, w)
       out ++= fs.listStatus(new org.apache.hadoop.fs.Path(dir))
         .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-        .map(_.getPath.toString).sorted
+        .map(st => (st.getPath.toString, st.getLen)).sortBy(_._1)
       prev = w
     }
     out.result()

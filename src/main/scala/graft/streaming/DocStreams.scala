@@ -59,14 +59,10 @@ object DocStreams {
   private val ND_BUCKETS_HEADER = "#ndbuckets="
 
   /** Enforce the bucket-count contract on a near-dup state set: a stored
-    * `#ndbuckets=` header must equal the passed count, loudly. A LEGACY
-    * state (pre-header) adopts this call's count only after PROVING the
-    * stored rows were bucketed with it — one aggregate over the seen
-    * table's (doc_id, id_bucket) pairs, paid once per state lifetime
-    * (the next publish persists the header as authoritative). Without
-    * the proof, a call passing a different count than the state was
-    * built with would silently drop cross-batch band collisions and then
-    * persist the WRONG count as the header.
+    * `#ndbuckets=` header must equal the passed count, loudly. A state
+    * without the header or without its band sibling predates the current
+    * format and is refused until [[rebucket]] upgrades it — guessing the
+    * count would silently drop cross-batch band collisions.
     */
   private def requireBucketContract(spark: SparkSession, seenRoot: String,
       buckets: Int): Unit = {
@@ -92,22 +88,16 @@ object DocStreams {
             "migrated (bucket values are baked into the stored rows); pass the " +
             "original count, or migrate with DocStreams.rebucket / " +
             "CALL sys.rebucket_neardup")
-      case None if Snapshots.versions(spark, seenRoot).nonEmpty =>
-        // legacy adoption: the stored id_bucket values must RECOMPUTE
-        // under this call's count — a one-doc state could pass by
-        // coincidence, but any real corpus pins the count exactly
-        val seen = Snapshots.read(spark, seenRoot)
-        if (seen.columns.contains("id_bucket")) {
-          val mismatched = seen.filter(col("id_bucket") =!=
-              pmod(xxhash64(col("doc_id")), lit(buckets.toLong)).cast("int"))
-            .limit(1).count()
-          require(mismatched == 0,
-            s"legacy near-dup state at $seenRoot (no ${ND_BUCKETS_HEADER.init} " +
-              s"header) holds id_bucket values inconsistent with " +
-              s"buckets=$buckets — pass the count the state was built with, " +
-              "or migrate with DocStreams.rebucket / CALL sys.rebucket_neardup")
-        }
       case None => // fresh state: this call's count becomes the contract
+    }
+    if (Snapshots.versions(spark, seenRoot).nonEmpty) {
+      val why =
+        if (seenStamp.isEmpty) Some(s"no ${ND_BUCKETS_HEADER.init} header")
+        else if (Snapshots.versions(spark, bandRootOf(seenRoot)).isEmpty) Some("no band state")
+        else None
+      why.foreach(Snapshots.outdatedFormat(s"near-dup state at $seenRoot", _,
+        s"run DocStreams.rebucket(spark, \"$seenRoot\", <pairsRoot>, $buckets) " +
+          "(or CALL sys.rebucket_neardup) to upgrade it"))
     }
   }
 
@@ -135,10 +125,15 @@ object DocStreams {
     * raw columns, never from the previous layout. Refuses a MID-BATCH
     * state (pairs/bands holding a batch id the seen marker lacks):
     * replay the in-flight trigger first, then migrate.
+    *
+    * Also the near-dup state's format UPGRADE: a state from before the
+    * count header gets it, and one from before the band table gets its
+    * band state derived once from the stored signatures (under the
+    * default MinHash params — the ones every ingest caller runs with).
     */
   def rebucket(spark: SparkSession, seenRoot: String, pairsRoot: String,
       newBuckets: Int): Unit = {
-    import graft.operators.Snapshots
+    import graft.operators.{MinHashDedup, Snapshots}
     require(newBuckets > 0, s"newBuckets must be positive, got $newBuckets")
     val bandRoot = bandRootOf(seenRoot)
     require(Snapshots.versions(spark, seenRoot).nonEmpty,
@@ -155,15 +150,15 @@ object DocStreams {
     val stamp = s"$ND_BUCKETS_HEADER$newBuckets"
     val seenStamp = Snapshots.headerValue(spark, seenRoot, ND_BUCKETS_HEADER)
     val bandStamp = Snapshots.headerValue(spark, bandRoot, ND_BUCKETS_HEADER)
-    if (seenStamp.contains(newBuckets.toString) &&
+    val hasBands = Snapshots.versions(spark, bandRoot).nonEmpty
+    if (hasBands && seenStamp.contains(newBuckets.toString) &&
         bandStamp.forall(_ == newBuckets.toString)) return // already there
-    if (Snapshots.versions(spark, bandRoot).nonEmpty) {
-      val bands = Snapshots.read(spark, bandRoot).drop("bucket")
-        .withColumn("bucket",
-          pmod(xxhash64(col("band"), col("bh")), lit(newBuckets.toLong)).cast("int"))
-      Snapshots.publish(spark, bandRoot, bands, clusterBy = Some("bucket"),
-        extraHeader = Seq(stamp))
-    }
+    val bands =
+      if (hasBands) Snapshots.read(spark, bandRoot).drop("bucket")
+      else MinHashDedup.bandRows(Snapshots.read(spark, seenRoot))
+    Snapshots.publish(spark, bandRoot, bands.withColumn("bucket",
+        pmod(xxhash64(col("band"), col("bh")), lit(newBuckets.toLong)).cast("int")),
+      clusterBy = Some("bucket"), extraHeader = Seq(stamp))
     val seen = Snapshots.read(spark, seenRoot).drop("id_bucket")
       .withColumn("id_bucket",
         pmod(xxhash64(col("doc_id")), lit(newBuckets.toLong)).cast("int"))
@@ -268,10 +263,7 @@ object DocStreams {
     // (probe joins on l.bucket === r.bucket) and read the wrong seen file
     // groups in verification. The first publish persists the count as a
     // manifest header; every later call must match it — loudly, never a
-    // silent pair drop. A state set predating the header (legacy) adopts
-    // this call's count: its layout was necessarily written with ONE
-    // count, and the deployment that varies the knob mid-state is exactly
-    // what the header exists to catch from here on.
+    // silent pair drop.
     val bucketsHeader = s"$ND_BUCKETS_HEADER$buckets"
     requireBucketContract(spark, seenRoot, buckets)
 
@@ -313,20 +305,6 @@ object DocStreams {
         extraHeader = Seq(bucketsHeader))
       finally prep.unpersist(false)
       return
-    }
-
-    // LEGACY upgrade: a seen state deployed before the clustered band
-    // table existed backfills bandRoot ONCE from its stored signatures —
-    // one full re-band (exactly one legacy-probe's cost), after which
-    // every probe is incremental. No batch header: the backfill is
-    // derived state, not an ingest unit (replay-safe — a crash before
-    // the batch's own publishes just re-derives it idempotently).
-    if (Snapshots.versions(spark, bandRoot).isEmpty &&
-        Snapshots.versions(spark, seenRoot).nonEmpty) {
-      val seenBands = MinHashDedup.bandRows(Snapshots.read(spark, seenRoot), p)
-        .withColumn("bucket",
-          pmod(xxhash64(col("band"), col("bh")), lit(buckets.toLong)).cast("int"))
-      Snapshots.publish(spark, bandRoot, seenBands, clusterBy = Some("bucket"))
     }
 
     val freshBands = MinHashDedup.bandRows(prep, p)
@@ -388,15 +366,11 @@ object DocStreams {
             if (Snapshots.clusterOf(spark, seenRoot, v).contains("id_bucket"))
               needBuckets.flatMap(bk =>
                 Snapshots.filesBetween(spark, seenRoot, v, "id_bucket", bk, bk)).distinct
-            else Snapshots.files(spark, seenRoot, v) // legacy unclustered state
-          Snapshots.schemaOf(spark, seenRoot, v) match {
-            case _ if rel.isEmpty => emptyShs
-            case Some(s) => spark.read.schema(s)
-              .parquet(rel.map(r => s"$seenRoot/$r"): _*)
-              .select(col("doc_id"), col("shset"))
-            case None => Snapshots.read(spark, seenRoot, Some(v))
-              .select(col("doc_id"), col("shset"))
-          }
+            else Snapshots.files(spark, seenRoot, v) // unclustered state
+          if (rel.isEmpty) emptyShs
+          else spark.read.schema(Snapshots.schemaOf(spark, seenRoot, v))
+            .parquet(rel.map(r => s"$seenRoot/$r"): _*)
+            .select(col("doc_id"), col("shset"))
       }
       val lookup = prep.select(col("doc_id"), col("shset")).unionByName(seenShs)
       val pairs = cands
@@ -522,11 +496,8 @@ object DocStreams {
                   Snapshots.filesBetween(spark, seenRoot, v, "id_bucket", bk, bk)).distinct
               else Snapshots.files(spark, seenRoot, v)
             if (rel.isEmpty) empty
-            else Snapshots.schemaOf(spark, seenRoot, v) match {
-              case Some(sch) => spark.read.schema(sch)
-                .parquet(rel.map(r => s"$seenRoot/$r"): _*).drop("id_bucket")
-              case None => Snapshots.read(spark, seenRoot, Some(v)).drop("id_bucket")
-            }
+            else spark.read.schema(Snapshots.schemaOf(spark, seenRoot, v))
+              .parquet(rel.map(r => s"$seenRoot/$r"): _*).drop("id_bucket")
         }
       }
       def withBucket(bands: DataFrame): DataFrame = bands.withColumn("bucket",
@@ -594,12 +565,6 @@ object DocStreams {
         mergeSeen()
         return
       }
-      // legacy/derived band state backfill (same as the append form)
-      if (Snapshots.versions(spark, bandRoot).isEmpty &&
-          Snapshots.versions(spark, seenRoot).nonEmpty)
-        Snapshots.publish(spark, bandRoot,
-          withBucket(MinHashDedup.bandRows(Snapshots.read(spark, seenRoot), p)),
-          clusterBy = Some("bucket"))
 
       // the superseded ids' PRE-update state rows (empty on a pure
       // insert batch): everything the update/delete owes derives from

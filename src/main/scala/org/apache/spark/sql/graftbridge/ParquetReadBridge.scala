@@ -65,57 +65,41 @@ object ParquetReadBridge {
       options = new ParquetOptions(Map.empty[String, String], conf))
   }
 
-  /** Bin-pack absolute file paths into scan partitions using Spark's own
-    * sizing (`maxPartitionBytes` / `openCostInBytes`), so a thousand
-    * small snapshot files coalesce and a handful of large ones spread —
-    * the same task shape the built-in parquet source would plan.
+  /** One scan file at its caller-known byte length — the snapshot
+    * source feeds manifest `#bytes=` metadata here, so planning a
+    * 10⁶-file table costs no per-file NameNode RPC (qualifying the path
+    * is client-side string work). `meta` holds per-file constant
+    * "partition" values — the vehicle for CONSTANT METADATA COLUMNS
+    * (`_file`, `_version`): the parquet factory appends them to the
+    * file's rows exactly like hive-partition columns. Modification time
+    * is reported as 0; this source exposes no
+    * `_metadata.file_modification_time` column, so nothing reads it.
     */
-  def filePartitions(spark: SparkSession, paths: Seq[String]): Array[InputPartition] =
-    filePartitionsSized(spark, paths.map(_ -> None))
+  private def partitionedFile(hconf: org.apache.hadoop.conf.Configuration,
+      file: (String, Long, InternalRow)): PartitionedFile = {
+    val (p, len, meta) = file
+    val hp = new Path(p)
+    PartitionedFile(meta, SparkPath.fromPath(hp.getFileSystem(hconf).makeQualified(hp)),
+      0L, len, Array.empty, 0L, len, Map.empty)
+  }
 
-  /** [[filePartitions]] with caller-known byte lengths: a `Some(len)`
-    * file is planned with ZERO filesystem calls — the snapshot source
-    * feeds manifest `#bytes=` metadata here, so planning a 10⁶-file
-    * table costs no per-file NameNode RPCs. `None` (legacy manifests
-    * that never recorded sizes) falls back to one `getFileStatus`.
-    * Modification time is reported as 0 for manifest-sized files; this
-    * source exposes no `_metadata.file_modification_time` column, so
-    * nothing reads it.
+  /** Bin-pack sized files into scan partitions using Spark's own sizing
+    * (`maxPartitionBytes` / `openCostInBytes`), so a thousand small
+    * snapshot files coalesce and a handful of large ones spread — the
+    * same task shape the built-in parquet source would plan. The
+    * caller's `partitionSchema` on [[readerFactory]] names the files'
+    * constant metadata values.
     */
-  def filePartitionsSized(spark: SparkSession,
-      files: Seq[(String, Option[Long])]): Array[InputPartition] =
-    filePartitionsMeta(spark, files.map { case (p, s) => (p, s, InternalRow.empty) })
-
-  /** [[filePartitionsSized]] with per-file constant "partition" values —
-    * the vehicle for CONSTANT METADATA COLUMNS (`_file`, `_version`):
-    * the parquet factory appends each file's values to its rows exactly
-    * like hive-partition columns (constant column vectors, multi-file
-    * packing intact). The caller's `partitionSchema` on
-    * [[readerFactory]] names them.
-    */
-  def filePartitionsMeta(spark: SparkSession,
-      files: Seq[(String, Option[Long], InternalRow)]): Array[InputPartition] = {
+  def filePartitions(spark: SparkSession,
+      files: Seq[(String, Long, InternalRow)]): Array[InputPartition] = {
     if (files.isEmpty) return Array.empty
-    lazy val hconf = spark.sessionState.newHadoopConf()
-    val pfs = files.map { case (p, size, meta) =>
-      val hp = new Path(p)
-      size match {
-        case Some(len) =>
-          // makeQualified is client-side string work, not an RPC
-          val qp = hp.getFileSystem(hconf).makeQualified(hp)
-          PartitionedFile(meta, SparkPath.fromPath(qp), 0L,
-            len, Array.empty, 0L, len, Map.empty)
-        case None =>
-          val st = hp.getFileSystem(hconf).getFileStatus(hp)
-          PartitionedFile(meta, SparkPath.fromPath(st.getPath), 0L,
-            st.getLen, Array.empty, st.getModificationTime, st.getLen, Map.empty)
-      }
-    }
+    val hconf = spark.sessionState.newHadoopConf()
+    val pfs = files.map(partitionedFile(hconf, _))
     val maxSplit = FilePartition.maxSplitBytes(spark, pfs.map(_.length).sum)
     FilePartition.getFilePartitions(spark, pfs, maxSplit).toArray
   }
 
-  /** [[filePartitionsMeta]] with a per-group integer TAG carried on every
+  /** [[filePartitions]] with a per-group integer TAG carried on every
     * resulting partition: the dv-aware scan groups files by first-seen
     * sequence and tags partitions with the group, so the reader applies
     * exactly the delete vectors committed at-or-after that group's
@@ -123,29 +107,16 @@ object ParquetReadBridge {
     * have ONE applicable dv set).
     */
   def taggedFilePartitions(spark: SparkSession,
-      groups: Seq[(Int, Seq[(String, Option[Long], InternalRow)])])
+      groups: Seq[(Int, Seq[(String, Long, InternalRow)])])
       : Array[InputPartition] = {
-    lazy val hconf = spark.sessionState.newHadoopConf()
-    def pf(p: String, size: Option[Long], meta: InternalRow): PartitionedFile = {
-      val hp = new Path(p)
-      size match {
-        case Some(len) =>
-          val qp = hp.getFileSystem(hconf).makeQualified(hp)
-          PartitionedFile(meta, SparkPath.fromPath(qp), 0L, len, Array.empty, 0L, len,
-            Map.empty)
-        case None =>
-          val st = hp.getFileSystem(hconf).getFileStatus(hp)
-          PartitionedFile(meta, SparkPath.fromPath(st.getPath), 0L, st.getLen,
-            Array.empty, st.getModificationTime, st.getLen, Map.empty)
-      }
-    }
-    val totalBytes = groups.flatMap(_._2).map { case (_, s, _) => s.getOrElse(0L) }.sum
+    val hconf = spark.sessionState.newHadoopConf()
+    val totalBytes = groups.flatMap(_._2).map(_._2).sum
     val maxSplit = FilePartition.maxSplitBytes(spark, totalBytes)
     var idx = -1
     groups.flatMap { case (tag, files) =>
       if (files.isEmpty) Nil
       else FilePartition.getFilePartitions(spark,
-          files.map { case (p, s, m) => pf(p, s, m) }, maxSplit)
+          files.map(partitionedFile(hconf, _)), maxSplit)
         .map { fp => idx += 1; new TaggedFilePartition(idx, fp.files, tag) }
     }.toArray
   }
@@ -161,30 +132,17 @@ object ParquetReadBridge {
     * never change the reported partition-value set, only thin it.
     */
   def keyedFilePartitions(spark: SparkSession,
-      groups: Seq[(InternalRow, Seq[(String, Option[Long], InternalRow)])])
+      groups: Seq[(InternalRow, Seq[(String, Long, InternalRow)])])
       : Array[InputPartition] = {
-    lazy val hconf = spark.sessionState.newHadoopConf()
-    def pf(p: String, size: Option[Long], meta: InternalRow): PartitionedFile = {
-      val hp = new Path(p)
-      size match {
-        case Some(len) =>
-          val qp = hp.getFileSystem(hconf).makeQualified(hp)
-          PartitionedFile(meta, SparkPath.fromPath(qp), 0L, len, Array.empty, 0L, len,
-            Map.empty)
-        case None =>
-          val st = hp.getFileSystem(hconf).getFileStatus(hp)
-          PartitionedFile(meta, SparkPath.fromPath(st.getPath), 0L, st.getLen,
-            Array.empty, st.getModificationTime, st.getLen, Map.empty)
-      }
-    }
-    val totalBytes = groups.flatMap(_._2).map { case (_, s, _) => s.getOrElse(0L) }.sum
+    val hconf = spark.sessionState.newHadoopConf()
+    val totalBytes = groups.flatMap(_._2).map(_._2).sum
     val maxSplit = FilePartition.maxSplitBytes(spark, totalBytes)
     var idx = -1
     groups.flatMap { case (key, files) =>
       val packed =
         if (files.isEmpty) Seq(Array.empty[PartitionedFile])
         else FilePartition.getFilePartitions(spark,
-          files.map { case (p, s, m) => pf(p, s, m) }, maxSplit).map(_.files)
+          files.map(partitionedFile(hconf, _)), maxSplit).map(_.files)
       packed.map { arr => idx += 1; new KeyedFilePartition(idx, arr, key) }
     }.toArray
   }
@@ -203,25 +161,12 @@ object ParquetReadBridge {
     * option — the scan only routes here when that conf is off.
     */
   def orderedKeyedFilePartitions(spark: SparkSession,
-      groups: Seq[(InternalRow, Seq[(String, Option[Long], InternalRow)])])
+      groups: Seq[(InternalRow, Seq[(String, Long, InternalRow)])])
       : Array[InputPartition] = {
-    lazy val hconf = spark.sessionState.newHadoopConf()
-    def pf(p: String, size: Option[Long], meta: InternalRow): PartitionedFile = {
-      val hp = new Path(p)
-      size match {
-        case Some(len) =>
-          val qp = hp.getFileSystem(hconf).makeQualified(hp)
-          PartitionedFile(meta, SparkPath.fromPath(qp), 0L, len, Array.empty, 0L, len,
-            Map.empty)
-        case None =>
-          val st = hp.getFileSystem(hconf).getFileStatus(hp)
-          PartitionedFile(meta, SparkPath.fromPath(st.getPath), 0L, st.getLen,
-            Array.empty, st.getModificationTime, st.getLen, Map.empty)
-      }
-    }
+    val hconf = spark.sessionState.newHadoopConf()
     groups.zipWithIndex.map { case ((key, files), idx) =>
       new KeyedFilePartition(idx,
-        files.map { case (p, s, m) => pf(p, s, m) }.toArray, key)
+        files.map(partitionedFile(hconf, _)).toArray, key)
     }.toArray
   }
 }

@@ -117,7 +117,7 @@ class CloneSpec extends AnyFunSuite {
     // no-op check must see THROUGH file-set equality (head-state
     // replication is meta-exact, not file-exact)
     val evolved = org.apache.spark.sql.types.StructType(
-      Snapshots.schemaOf(spark, src, 1).get.fields :+
+      Snapshots.schemaOf(spark, src, 1).fields :+
         org.apache.spark.sql.types.StructField("note",
           org.apache.spark.sql.types.StringType))
     Snapshots.evolveSchema(spark, src, evolved)

@@ -1387,6 +1387,24 @@ class MvSpec extends AnyFunSuite {
     assert(Mv.refresh(spark, m).mode === "noop")
   }
 
+  test("a pre-__vd count(distinct) companion is refused: drop and recreate the MV") {
+    val b = s"$wh/ndbvd"; val m = s"$wh/ndmvd"
+    Snapshots.publish(spark, b, base(Seq((1L, "a", 10L), (2L, "b", 20L))))
+    Mv.create(spark, m, b, Seq("k"), Seq("g"), Seq("v"), mvBuckets = 8,
+      distinctCols = Seq("v"))
+    // the companion as a writer before the value digest shaped it: same
+    // rows, layout and refresh watermark, no __vd column
+    val comp = Mv.dvRoot(m, "v")
+    val cv = Snapshots.versions(spark, comp).last
+    Snapshots.publish(spark, comp, Snapshots.read(spark, comp).drop("__vd"),
+      clusterBy = Snapshots.clusterOf(spark, comp, cv),
+      extraHeader = Seq(s"#batch=${Snapshots.lastBatchId(spark, comp).get}"))
+    Snapshots.publish(spark, b, base(Seq((3L, "a", 30L))), append = true)
+    val e = intercept[IllegalStateException](Mv.refresh(spark, m))
+    assert(e.getMessage.contains("__vd") &&
+      e.getMessage.contains("drop and recreate the MV"), e.getMessage)
+  }
+
   test("count(distinct) refresh reads only the touched groups' companion buckets") {
     import spark.implicits._
     import graft.sources.CountingFileSystem

@@ -157,7 +157,7 @@ class SnapshotClusterSpec extends AnyFunSuite {
     assert(Snapshots.clusterOf(spark, root, 2).isEmpty)
     val v3 = Snapshots.rollback(spark, root, 1)
     assert(Snapshots.clusterOf(spark, root, v3).contains("o_orderstatus"))
-    val withExtra = Snapshots.schemaOf(spark, root, v3).get
+    val withExtra = Snapshots.schemaOf(spark, root, v3)
       .add("note", org.apache.spark.sql.types.StringType, nullable = true)
     val v4 = Snapshots.evolveSchema(spark, root, withExtra)
     assert(Snapshots.clusterOf(spark, root, v4).contains("o_orderstatus"))

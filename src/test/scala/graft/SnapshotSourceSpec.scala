@@ -87,7 +87,7 @@ class SnapshotSourceSpec extends AnyFunSuite {
     assert(hist == actual, s"describeHistory bytes $hist != $actual")
   }
 
-  test("legacy manifests without #bytes= still read (getFileStatus fallback)") {
+  test("a manifest without #bytes= is refused until Snapshots.upgrade") {
     val root = freshRoot("legacybytes")
     Snapshots.publish(spark, root, orders.limit(1000))
     // rewrite the manifest as a pre-#bytes= writer would have produced it
@@ -97,19 +97,28 @@ class SnapshotSourceSpec extends AnyFunSuite {
     java.nio.file.Files.write(mf.toPath, stripped.getBytes("UTF-8"))
     // the rewrite bypassed hadoop's ChecksumFileSystem — drop the sidecar
     new java.io.File(s"$root/_snapshots/.v1.crc").delete()
-    assert(Snapshots.byteCountsOf(spark, root, 1).isEmpty)
-    val rel = Snapshots.files(spark, root, 1)
+    val e = intercept[IllegalStateException](readSource(root).count())
+    assert(e.getMessage.contains("#bytes=") && e.getMessage.contains("Snapshots.upgrade"),
+      e.getMessage)
+    // upgrade-then-read: same rows, and sizing is manifest-resident again
+    assert(Snapshots.upgrade(spark, root) == 2)
+    assert(Snapshots.upgrade(spark, root) == 2, "a current head is left alone")
+    val rel = Snapshots.files(spark, root, 2)
+    assert(rel == Snapshots.files(spark, root, 1), "upgrade moves no data file")
     val actual = rel.map(r => new java.io.File(s"$root/$r").length()).sum
+    assert(rel.map(Snapshots.byteCountsOf(spark, root, 2)).sum == actual)
     assert(readSource(root).count() == 1000)
-    assert(Snapshots.describeHistory(spark, root)
-      .select("total_bytes").head.getLong(0) == actual)
     val planned = readSource(root).queryExecution.executedPlan.collect {
       case b: BatchScanExec => b }.head.inputPartitions.flatMap {
       case fp: org.apache.spark.sql.execution.datasources.FilePartition =>
         fp.files.map(_.length)
       case other => fail(s"unexpected partition shape: $other")
     }.sum
-    assert(planned == actual, "fallback sizing must stat the files")
+    assert(planned == actual, "upgraded sizing must plan the real lengths")
+    // the pre-upgrade version stays outdated until expired
+    Snapshots.expire(spark, root, keepLast = 1)
+    assert(Snapshots.describeHistory(spark, root)
+      .select("total_bytes").head.getLong(0) == actual)
   }
 
   test("batch read matches Snapshots.read, supports time travel") {
@@ -550,7 +559,7 @@ class SnapshotSourceSpec extends AnyFunSuite {
       clustered(orders.filter(col("o_orderkey") <= lit(mid))))
     Snapshots.publish(spark, root,
       clustered(orders.filter(col("o_orderkey") > lit(mid))), append = true)
-    val schema = Snapshots.schemaOf(spark, root, 2).get
+    val schema = Snapshots.schemaOf(spark, root, 2)
     val opts = new org.apache.spark.sql.util.CaseInsensitiveStringMap(
       java.util.Map.of("root", root))
     def planned(filters: Array[org.apache.spark.sql.sources.Filter]): Seq[String] = {
@@ -887,7 +896,7 @@ class SnapshotSourceSpec extends AnyFunSuite {
       orders.filter(col("o_orderkey") % 3 === 2), append = true)
     def filesAt(v: Int): Set[String] =
       Snapshots.files(spark, root, v).map(r => s"$root/$r").toSet
-    val schema = Snapshots.schemaOf(spark, root, 3).get
+    val schema = Snapshots.schemaOf(spark, root, 3)
     val opts = new org.apache.spark.sql.util.CaseInsensitiveStringMap(
       java.util.Map.of("root", root))
     val s = new graft.sources.SnapshotScanBuilder(schema, opts)

@@ -491,14 +491,56 @@ class SnapshotsSpec extends AnyFunSuite {
       Seq((-1L, java.sql.Timestamp.valueOf("1970-01-01 00:00:00"), "zz")).toDF(
         "o_orderkey", "o_orderdate", "o_orderpriority"), Seq("o_orderkey"))
     assert(Snapshots.countRows(spark, root) == Some(scan.getLong(0) + 1))
-    // a hand-stripped manifest (no stats) yields None, never a guess
-    val f = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val mPath = new Path(s"$root/_snapshots/v2")
-    val lines = scala.io.Source.fromInputStream(f.open(mPath), "UTF-8").getLines().toList
-    val out = f.create(mPath, true)
-    out.write((lines.filterNot(_.startsWith("#rows=")).mkString("\n") + "\n").getBytes("UTF-8"))
-    out.close()
-    assert(Snapshots.countRows(spark, root).isEmpty)
+    // a hand-stripped manifest (no row counts) is refused, never a guess;
+    // the upgrade re-collects the counts from the footers
+    rewriteManifests(root)(_.filterNot(_.startsWith("#rows=")))
+    val e = intercept[IllegalStateException](Snapshots.countRows(spark, root))
+    assert(e.getMessage.contains("Snapshots.upgrade"), e.getMessage)
+    Snapshots.upgrade(spark, root)
+    assert(Snapshots.countRows(spark, root) == Some(scan.getLong(0) + 1))
+  }
+
+  /** Rewrite every manifest of `root` the way an older writer shaped it. */
+  private def rewriteManifests(root: String)(f: List[String] => List[String]): Unit = {
+    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Snapshots.versions(spark, root).foreach { v =>
+      val mPath = new Path(s"$root/_snapshots/v$v")
+      val in = fs.open(mPath)
+      val lines = try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
+        finally in.close()
+      val out = fs.create(mPath, true)
+      try out.write((f(lines).mkString("\n") + "\n").getBytes("UTF-8")) finally out.close()
+    }
+  }
+
+  test("outdated manifest shapes are refused naming Snapshots.upgrade; upgrade keeps rows") {
+    import spark.implicits._
+    val shapes: Seq[(String, List[String] => List[String])] = Seq(
+      "#schema=" -> (_.filterNot(_.startsWith("#schema="))),
+      "#seq=" -> (_.filterNot(_.startsWith("#seq="))),
+      "#rows=" -> (_.filterNot(_.startsWith("#rows="))),
+      "#bytes=" -> (_.filterNot(_.startsWith("#bytes="))),
+      "unversioned #dv=" -> (_.map(l =>
+        if (l.startsWith("#dv=")) l.split("\t").take(2).mkString("\t") else l)))
+    shapes.foreach { case (shape, strip) =>
+      val root = freshRoot("outdated")
+      // v1 keys 1..4; v2 deletes key 2 merge-on-read; v3 re-inserts it —
+      // the re-insert must stay visible (first-seen after the delete)
+      Snapshots.publish(spark, root, Seq((1L, "a"), (2L, "b"), (3L, "c"), (4L, "d"))
+        .toDF("k", "s"))
+      Snapshots.deleteByKey(spark, root, Seq(2L).toDF("k"))
+      Snapshots.publish(spark, root, Seq((2L, "b2"), (5L, "e")).toDF("k", "s"), append = true)
+      val before = Snapshots.read(spark, root).collect().toSet
+      assert(before.map(_.getLong(0)) == Set(1L, 2L, 3L, 4L, 5L))
+      rewriteManifests(root)(strip)
+      val e = intercept[IllegalStateException](Snapshots.read(spark, root).collect())
+      assert(e.getMessage.contains("Snapshots.upgrade"), s"$shape: ${e.getMessage}")
+      assert(Snapshots.upgrade(spark, root) == 4, shape)
+      assert(Snapshots.read(spark, root).collect().toSet == before, shape)
+      assert(Snapshots.countRows(spark, root).isEmpty, s"$shape: dvs stay outstanding")
+      assert(Snapshots.read(spark, root, Some(4)).count() == 5)
+      intercept[IllegalStateException](Snapshots.read(spark, root, Some(3)))
+    }
   }
 
   test("bloom point lookup prunes unclustered files; absence keeps them") {

@@ -498,34 +498,38 @@ class StreamingSpec extends AnyFunSuite {
     assert(got == expected && got.nonEmpty, s"probe rows: $got vs $expected")
   }
 
-  test("incremental near-dup: a legacy (pre-bands) seen state backfills and still pairs") {
-    // a seen state from a deployment older than the clustered band table
-    // has no bands sibling: the first batch after the upgrade must
-    // backfill bandRoot from the stored signatures ONCE — and still find
-    // pairs against the legacy docs (silently finding none would be the
-    // worst failure mode of the layout change)
+  test("incremental near-dup: pre-bands state refused until rebucket, then pairs") {
+    // a seen state from a deployment older than the count header and the
+    // clustered band table: ingest refuses it naming the upgrade, and the
+    // upgraded state must still find pairs against the old docs (silently
+    // finding none would be the worst failure mode of the layout change)
     import spark.implicits._
     import graft.operators.{MinHashDedup, Snapshots}
     import graft.streaming.DocStreams
     val base = java.nio.file.Files.createTempDirectory("graft-incdup-legacy").toString
     val (seen, pairs) = (s"$base/seen", s"$base/pairs")
-    // legacy layout: prepared rows published UNclustered, no bands root
-    val legacy = Seq((1L, "alpha beta gamma delta epsilon"),
+    // old layout: prepared rows published UNclustered, no header, no bands
+    val old = Seq((1L, "alpha beta gamma delta epsilon"),
       (2L, "totally unrelated content here now")).toDF("doc_id", "text")
     Snapshots.publish(spark, seen,
-      MinHashDedup.prepared(legacy, "doc_id", "text"))
+      MinHashDedup.prepared(old, "doc_id", "text"))
     Snapshots.publish(spark, pairs,
-      legacy.select(col("doc_id").as("doc_a"), col("doc_id").as("doc_b"),
+      old.select(col("doc_id").as("doc_a"), col("doc_id").as("doc_b"),
         lit(1.0).as("jac")).limit(0))
     val batch = Seq((3L, "alpha beta gamma delta epsilon")).toDF("doc_id", "text")
-    DocStreams.incrementalNearDup(seen, pairs)(batch, 0L)
+    val e = intercept[IllegalStateException](
+      DocStreams.incrementalNearDup(seen, pairs)(batch, 0L))
+    assert(e.getMessage.contains("DocStreams.rebucket"), e.getMessage)
+    assert(Snapshots.versions(spark, pairs) == Seq(1), "a refused batch publishes nothing")
+    DocStreams.rebucket(spark, seen, pairs, 64)
     val bandRoot = DocStreams.bandRootOf(seen)
     assert(Snapshots.versions(spark, bandRoot).nonEmpty,
-      "the upgrade batch must backfill the band state")
+      "the upgrade must backfill the band state")
+    DocStreams.incrementalNearDup(seen, pairs)(batch, 0L)
     val got = Snapshots.read(spark, pairs).select("doc_a", "doc_b")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(got == Set((1L, 3L)), s"legacy cross pair must be found: $got")
-    // the backfilled band table covers legacy AND batch docs
+    assert(got == Set((1L, 3L)), s"cross pair against the old docs must be found: $got")
+    // the backfilled band table covers old AND batch docs
     assert(Snapshots.read(spark, bandRoot).select("doc_id").distinct().count() == 3)
   }
 
